@@ -4111,7 +4111,7 @@ def q_group_split(spark, sf_dir):
                        test_frac=0.2).select("doc_id", "source", "split")
 
 
-def q_curation_flagship(spark, sf_dir):
+def q_curation_flagship(spark, sf_dir, return_stages=False):
     """The end-to-end curation flagship (curate_corpus): clean ->
     Gopher+blocklist gates -> canonical-URL dedup -> md5-MinHash LSH
     dedup (connected components, keep min-id representative) ->
@@ -4119,7 +4119,9 @@ def q_curation_flagship(spark, sf_dir):
     temperature mixture (8000-token budget) -> leakage-safe source
     split -> sequence packing.  One declarative plan; the oracle
     replays every stage (md5 twin).  The xxhash64 fast-hash variant of
-    stage 4 is the bench path (identical plan shape)."""
+    stage 4 is the bench path (identical plan shape).
+    ``return_stages=True`` also returns the stage frames
+    (:func:`curate_corpus`), for plan-shape tests."""
     from cascading_flink_spark.extensions.text import clean_text_expr
     docs = _t(spark, sf_dir, "documents").withColumn("url", _messy_url())
     bench = docs.filter(F.col("doc_id") % 20 == 0).select(
@@ -4132,7 +4134,8 @@ def q_curation_flagship(spark, sf_dir):
                            max_mean_word_len_x100=450,
                            min_stop_hits=1),
         blocklist_terms=["dup"],
-        total_budget=8000, test_frac=0.2, context_len=512)
+        total_budget=8000, test_frac=0.2, context_len=512,
+        return_stages=return_stages)
 
 
 def q_curation_dsir(spark, sf_dir):

@@ -138,17 +138,12 @@ def curate_corpus(docs: DataFrame, benchmark: DataFrame,
     # PushPredicateThroughNonJoin happily sinks it — clean/gopher
     # regexes and all — straight through the round-robin exchange back
     # into the single-task scan stage (measured round 14: a 1.0s 1-task
-    # stage re-appearing under the unprotected spelling).  Round 14
-    # blocked it with a conditional localCheckpoint pin; round 15
-    # (VERDICT r14 Next #3 — the per-boundary construction floor)
-    # replaces the pin with the :func:`.dedup._no_push` predicate
-    # barrier: one fewer materialization boundary per flagship query
-    # (each lazy pin still runs its AQE exchange DAG at toRdd time),
-    # and — unlike the conditional pin, which no-oped at scale — it
-    # also stops pushdown from substituting the clean_text regex INTO
-    # the gate below the projection on the many-split path, where the
-    # gate's complex expressions could never reach parquet
-    # PushedFilters anyway (scale-neutral barrier, strictly less work).
+    # stage re-appearing under the unprotected spelling).  The
+    # :func:`.dedup._no_push` predicate barrier keeps it above the
+    # exchange without a materialization boundary (each lazy pin still
+    # runs its AQE exchange DAG at toRdd time).  An earlier guard was
+    # folded away by the optimizer, so the barrier is pinned by
+    # ``tests/test_construction_plans.py``.
     fanned = _fan_out(raw)
     cleaned = fanned.withColumn(text_col, clean_text_expr(
         F.coalesce(F.col(text_col), F.lit(""))))
@@ -197,8 +192,8 @@ def curate_corpus(docs: DataFrame, benchmark: DataFrame,
     # leaves every downstream transformation re-analyzing the whole
     # expression tree (measured: driver-side analysis, not execution,
     # dominated the composed pipeline).  localCheckpoint truncates the
-    # plan to a flat scan of the materialized corpus; lazy, so nothing
-    # runs until the dedup stage's own count.  At cluster scale this is
+    # plan to a flat scan of the materialized corpus; lazy, though the
+    # URL-dedup shuffle stages above run here.  At cluster scale this is
     # the boundary a real pipeline would write to durable storage
     # (swap for reliable checkpoint/parquet there — localCheckpoint is
     # executor-local and not fault-tolerant).
@@ -206,6 +201,8 @@ def curate_corpus(docs: DataFrame, benchmark: DataFrame,
     pair_fn = minhash_lsh_pairs_md5 if use_md5 else minhash_lsh_pairs
     pairs = pair_fn(gated, n=minhash_n, num_hashes=num_hashes, bands=bands,
                     threshold=threshold, text_col=text_col, id_col=id_col)
+    # below the driver cutoff the clusters carry a broadcast hint, so
+    # the anti-join broadcasts the dup-id set and the corpus stays put
     dup_ids = (dedup_clusters(pairs)
                .filter(F.col("id") != F.col("cluster_id"))
                .select(F.col("id").alias(id_col)))

@@ -59,28 +59,80 @@ def _fan_out(df: DataFrame) -> DataFrame:
     100 TB read (thousands of splits, already >= cluster parallelism) it
     is pure waste; skip it whenever the input already carries at least the
     session's default parallelism.  Results are partition-independent
-    either way."""
+    either way.
+
+    The split count is read off the physical plan (:func:`_plan_splits`),
+    which runs no Spark job.  Only when the plan's partitioning comes from
+    a shuffle AQE may coalesce does it fall back to
+    ``df.rdd.getNumPartitions()``, which executes that shuffle's stages."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    if not df.isStreaming and df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)
+    if df.isStreaming:
+        return df.repartition(target)
+    splits = _plan_splits(df._jdf.queryExecution().executedPlan())
+    if splits is None:
+        splits = df.rdd.getNumPartitions()
+    return df if splits >= target else df.repartition(target)
+
+
+# Unary operators whose output partition count is not their child's.
+_SPLIT_BREAKERS = frozenset(
+    {"CollectLimitExec", "CollectTailExec", "TakeOrderedAndProjectExec"})
+
+
+def _plan_splits(node, adaptive: bool = False) -> int | None:
+    """Partitions the physical plan ``node`` produces, known without
+    running it, or ``None`` when only execution can tell.
+
+    Follows the partition-preserving path down from the root: through
+    unary operators, through the stream side of a broadcast join, to a
+    parquet scan's splits or a pinned RDD's partitions.  A user
+    ``repartition(n)`` or ``coalesce(n)`` fixes the count at ``n``.  Any
+    other shuffle fixes it only without AQE: under AQE its partitions
+    may be coalesced at run time, so the answer is ``None``."""
+    name = node.getClass().getName().rsplit(".", 1)[-1]
+    if name == "AdaptiveSparkPlanExec":
+        return _plan_splits(node.executedPlan(), adaptive=True)
+    if name == "ShuffleExchangeExec":
+        if adaptive and str(node.shuffleOrigin()) != "REPARTITION_BY_NUM":
+            return None
+        return node.numPartitions()
+    if name == "CoalesceExec":
+        return node.numPartitions()
+    if name == "FileSourceScanExec":
+        return node.inputRDD().getNumPartitions()
+    if name == "RDDScanExec":
+        return node.rdd().getNumPartitions()
+    if name in ("BroadcastHashJoinExec", "BroadcastNestedLoopJoinExec"):
+        build_left = str(node.buildSide()) == "BuildLeft"
+        return _plan_splits(node.right() if build_left else node.left(),
+                            adaptive)
+    kids = node.children()
+    if kids.size() == 1 and name not in _SPLIT_BREAKERS:
+        return _plan_splits(kids.apply(0), adaptive)
+    return None
 
 
 def _no_push(pred: Column) -> Column:
-    """Pushdown barrier for a WHOLE filter predicate (round 15):
-    ``when(rand(0) > -1, pred) else false`` evaluates to ``pred``
-    identically (the guard is always true; rand(0) is seeded, so task
-    retries recompute the same — irrelevant — values), but the
+    """Pushdown barrier for a WHOLE filter predicate:
+    ``when(spark_partition_id() >= 0, pred) else false`` evaluates to
+    ``pred`` identically (the guard is always true), but the
     nondeterministic guard lives INSIDE the ``when``, where
-    PushPredicateThroughNonJoin can neither push the filter nor split
-    the conjunction apart to push its deterministic conjuncts
-    individually (the failure mode of ``pred & rand-guard``, which the
-    optimizer splits).  Use it when a filter references EXPENSIVE
-    computed columns (regex chains) and pushdown would re-evaluate
-    them below a repartition/projection — the sibling of :func:`_once`
-    for predicates instead of projected expressions.  Codegen-friendly
-    (rand and when are codegen expressions)."""
-    return F.when(F.rand(0) > F.lit(-1.0), pred).otherwise(F.lit(False))
+    PushPredicateThroughNonJoin can neither push the filter through a
+    repartition nor split the conjunction apart to push its
+    deterministic conjuncts individually (the failure mode of
+    ``pred & guard``, which the optimizer splits).  Use it when a filter
+    references EXPENSIVE computed columns (regex chains) and pushdown
+    would move them below a repartition — the sibling of :func:`_once`
+    for predicates instead of projected expressions.  The filter still
+    moves below a deterministic projection directly under it.
+
+    The guard must be one the optimizer cannot fold: an earlier
+    spelling, ``rand(0) > -1``, was a no-op, because OptimizeRand rewrites
+    a comparison of ``rand`` with a literal outside [0, 1) to ``true``
+    and the filter was pushed as if unguarded.  Codegen-friendly
+    (spark_partition_id and when are codegen expressions)."""
+    return (F.when(F.spark_partition_id() >= 0, pred)
+             .otherwise(F.lit(False)))
 
 
 def _once(col: Column) -> Column:
@@ -778,16 +830,19 @@ def _xx_banded(df: DataFrame, text_col: str, id_col: str, n: int,
     rows_per_band = _check_bands(num_hashes, bands)
     sig = (_fan_out(df)
            .select(F.col(id_col).alias("id"),
-                   _minhash_sig_arrow(text_col, n, num_hashes).alias("sig"))
-           .filter(F.size("sig") > 0))
+                   _minhash_sig_arrow(text_col, n, num_hashes).alias("sig")))
+    # An empty signature would hash to one shared band key, so it gets no
+    # bands: the explode's input is NULL for it.  A filter on size(sig)
+    # instead would be pushed beneath the projection and run the Arrow
+    # UDF a second time.
     banded = sig.select(
         "id", "sig",
-        F.explode(F.array(*[
+        F.explode(F.when(F.size("sig") > 0, F.array(*[
             F.struct(F.lit(b).alias("band"),
                      F.xxhash64(*[F.col("sig")[b * rows_per_band + r]
                                   for r in range(rows_per_band)]).alias("bh"))
             for b in range(bands)
-        ])).alias("bk"))
+        ]))).alias("bk"))
     return banded.select("id", "sig", F.col("bk.band").alias("band"),
                          F.col("bk.bh").alias("bh"))
 
@@ -812,9 +867,13 @@ def _md5_banded(df: DataFrame, text_col: str, id_col: str, n: int,
     shingled = (_shingled if _shingled is not None
                 else _fan_out(df).select(
                     F.col(id_col).alias("id"),
-                    _word_shingles_arrow(text_col, n).alias("sh"))) \
-        .filter(F.size("sh") > 0)
-    inv = shingled.select("id", F.explode("sh").alias("s"))
+                    _word_shingles_arrow(text_col, n).alias("sh")))
+    # explode_outer + a null-element filter drops shingle-less documents
+    # like an inner explode, but an inner explode lets Catalyst infer
+    # size(sh) > 0 and push it beneath the projection, which then runs
+    # the Arrow shingle UDF twice (shingles are never null)
+    inv = (shingled.select("id", F.explode_outer("sh").alias("s"))
+           .filter(F.col("s").isNotNull()))
     mins = inv.groupBy("id").agg(*[
         F.min(F.md5(F.concat_ws("#", F.lit(str(i)), F.col("s")))).alias(f"__h{i}")
         for i in range(num_hashes)
@@ -1300,6 +1359,28 @@ def _strip_rebuild(base: DataFrame, removed: DataFrame, id_col: str,
                      .alias(removed_name)))
 
 
+def _gram_fps(df: DataFrame, k: int, text_col: str,
+              id_col: str) -> DataFrame:
+    """``(id, pos, fp)``: one row per token ``k``-gram of each document,
+    ``fp`` the md5 of the gram's tokens joined by single spaces, tokens
+    from ``split(lower(trim(text)), '\\s+')``.  Documents with fewer
+    than ``k`` tokens emit no row.  The native twin of
+    :func:`_gram_fp_list`, which yields the same (pos, fp) pairs."""
+    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    nt = F.size(toks)
+    # greatest() keeps the sequence endpoint valid if the then-branch is
+    # evaluated eagerly for short docs; the when() guard discards it
+    pos_arr = (F.when(nt >= k,
+                      F.sequence(F.lit(0), F.greatest(nt - k, F.lit(0))))
+               .otherwise(F.array().cast("array<int>")))
+    return (df.select(F.col(id_col).alias("id"), toks.alias("__t"),
+                      F.explode(pos_arr).alias("pos"))
+              .select("id", "pos",
+                      F.md5(F.concat_ws(
+                          " ", F.slice(F.col("__t"), F.col("pos") + 1, k)))
+                       .alias("fp")))
+
+
 def strip_boilerplate(df: DataFrame, k: int = 4, w: int = 4,
                       max_df: int = 10, text_col: str = "text",
                       id_col: str = "doc_id") -> DataFrame:
@@ -1344,20 +1425,7 @@ def strip_boilerplate(df: DataFrame, k: int = 4, w: int = 4,
     identical gram strings, md5-hashed; the '#'-position string
     format is gone because it only existed to round-trip (fp, pos)
     through one Arrow string column."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    nt = F.size(toks)
-    # greatest() keeps the sequence endpoint valid if the then-branch is
-    # evaluated eagerly for short docs; the when() guard discards it
-    pos_arr = (F.when(nt >= k,
-                      F.sequence(F.lit(0), F.greatest(nt - k, F.lit(0))))
-               .otherwise(F.array().cast("array<int>")))
-    fps = (_fan_out(df)
-           .select(F.col(id_col).alias("id"), toks.alias("__t"),
-                   F.explode(pos_arr).alias("pos"))
-           .select("id", "pos",
-                   F.md5(F.concat_ws(
-                       " ", F.slice(F.col("__t"), F.col("pos") + 1, k)))
-                    .alias("fp")))
+    fps = _gram_fps(_fan_out(df), k, text_col, id_col)
     hot = (fps.select("id", "fp").distinct()
               .groupBy("fp").agg(F.count(F.lit(1)).alias("__df"))
               .filter(F.col("__df") > max_df)
@@ -1528,13 +1596,19 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     representative for every duplicate cluster.
 
     Graphs at or under ``driver_cutoff_edges`` run a driver-side
-    union-find over the (bounded, already-counted) pair list: a dup
-    graph is a tiny fraction of any corpus, and each distributed round
-    costs several fixed-latency jobs — measured 6.5s of round overhead
-    for a 288-edge graph that union-find resolves in microseconds.
-    The pair frame is persisted and counted ONCE (the count doubles as
-    the size gate), so the expensive upstream (winnow/minhash candidate
-    generation) is never recomputed.
+    union-find over the pair list: a dup graph is a tiny fraction of any
+    corpus, and each distributed round costs several fixed-latency jobs
+    — measured 6.5s of round overhead for a 288-edge graph that
+    union-find resolves in microseconds.  One bounded pull,
+    ``limit(driver_cutoff_edges + 1).collect()``, is both the size gate
+    and the edge list, so the driver holds at most
+    ``driver_cutoff_edges + 1`` pairs.  The driver path's output is a
+    driver-built frame of at most ``2 * driver_cutoff_edges`` rows; it
+    carries a broadcast hint, because Spark cannot size a frame built
+    from driver rows and would otherwise plan a join against the corpus
+    as a SortMergeJoin that shuffles the whole corpus.  Above the cutoff
+    the pair frame is pinned for the distributed rounds, so the pair
+    plan runs a second time there (the pull does not keep its rows).
 
     Above the cutoff this DELEGATES to
     :func:`~cascading_flink_spark.extensions.graph.connected_components`
@@ -1549,10 +1623,9 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     convergence check raises rather than silently splitting a cluster
     into several "representatives".  Identical output by construction
     on every path (min member per component, node types preserved)."""
-    pairs = (pairs.select(F.col(id_a), F.col(id_b))
-             .localCheckpoint(eager=False))
-    n_pairs = pairs.count()
-    if n_pairs <= driver_cutoff_edges:
+    pairs = pairs.select(F.col(id_a), F.col(id_b))
+    rows = pairs.limit(driver_cutoff_edges + 1).collect()
+    if len(rows) <= driver_cutoff_edges:
         spark = pairs.sparkSession
         id_type = pairs.schema[id_a].dataType
         parent: dict = {}
@@ -1566,11 +1639,8 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
             return root
 
         # union-find needs neither direction-doubling nor distinct — raw
-        # (possibly duplicated) pairs fold in directly.  collect(), not
-        # toLocalIterator(): the row count is already proven <= cutoff
-        # (bounded driver memory), and toLocalIterator schedules one job
-        # per partition — ~2s of job latency on a 32-partition frame.
-        for row in pairs.collect():
+        # (possibly duplicated) pairs fold in directly
+        for row in rows:
             s, d = row[0], row[1]
             parent.setdefault(s, s)
             parent.setdefault(d, d)
@@ -1584,11 +1654,12 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
                     for members in comp.values() for node in members]
         schema = T.StructType([T.StructField("id", id_type),
                                T.StructField("cluster_id", id_type)])
-        return spark.createDataFrame(out_rows, schema)
+        return F.broadcast(spark.createDataFrame(out_rows, schema))
     # Delegate to the audited log-round stars contraction (graph.py),
     # src/dst bound to the pair columns; the convergence check turns
     # max_iterations into a guarded budget instead of a silent horizon.
     from .graph import connected_components
+    pairs = pairs.localCheckpoint(eager=False)
     out = connected_components(pairs, rounds=max_iterations,
                                src_col=id_a, dst_col=id_b,
                                strategy="stars",

@@ -499,8 +499,6 @@ def _kmeans_md5_fit(corpus: DataFrame, k: int, iterations: int,
                 "must be non-null end-to-end; filter or impute first")
         cents.append([float(x) for x in r["__sv"]])
 
-    dim = len(cents[0]) if cents else 0
-
     def assign_to(c):
         return (vecs.withColumn("__best",
                                 _argmax_cosine(F.col("__dv"), c))

@@ -32,24 +32,14 @@ def test_strip_boilerplate_matches_gram_fp_list(spark, sf_dir):
     (pos, fp) rows of the Python twin ``_gram_fp_list`` (the winnowing
     family still defines the format) over the real corpus."""
     from cascading_flink_spark.extensions.dedup import (_gram_fp_list,
+                                                        _gram_fps,
                                                         _java_ws_tokens)
-    from pyspark.sql import functions as F
 
     k = 4
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .select("doc_id", "text").limit(200)
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    nt = F.size(toks)
-    pos_arr = (F.when(nt >= k,
-                      F.sequence(F.lit(0), F.greatest(nt - k, F.lit(0))))
-               .otherwise(F.array().cast("array<int>")))
-    native = (docs.select("doc_id", toks.alias("t"),
-                          F.explode(pos_arr).alias("pos"))
-              .select("doc_id", "pos",
-                      F.md5(F.concat_ws(
-                          " ", F.slice(F.col("t"), F.col("pos") + 1, k)))
-                       .alias("fp")))
-    got = {(r["doc_id"], r["pos"], r["fp"]) for r in native.collect()}
+    native = _gram_fps(docs, k, "text", "doc_id")
+    got = {(r["id"], r["pos"], r["fp"]) for r in native.collect()}
     want = set()
     for r in docs.collect():
         t = r["text"]
