@@ -40,7 +40,7 @@ from cascading_flink_spark.extensions import (
     margin_mine,
     lsh_bucketed_topk_md5,
     pq_topk, pq_topk_md5, semdedup_pairs, semdedup_pairs_md5,
-    minhash_lsh_pairs, minhash_lsh_pairs_md5,
+    minhash_lsh_pairs,
     ngram_jaccard_pairs, quality_features, quality_filter, redact_pii,
     salted_agg, simhash_dup_pairs, simhash_md5_pairs, stratified_sample,
     strip_boilerplate, token_budget, winnow_pairs,
@@ -446,13 +446,17 @@ def q_ngram_containment(spark, sf_dir):
                                    n=3, threshold=0.6)
 
 
-def q_minhash_lsh(spark, sf_dir):
-    """md5-hex MinHash (lexicographic min over md5 hex strings): fully
-    DuckDB-reproducible, so the correctness gate hash-checks it.  The
-    xxhash64 fast path (minhash_lsh_pairs) is the bench/production variant
-    — identical plan shape, cheaper hashing."""
-    return minhash_lsh_pairs_md5(_t(spark, sf_dir, "documents"),
-                                 n=3, num_hashes=32, bands=8, threshold=0.5)
+def q_minhash_lsh(spark, sf_dir, use_md5=True):
+    """MinHash + LSH near-dup pairs.  ``use_md5=True`` (the gate
+    spelling) is the md5-hex family (lexicographic min over md5 hex
+    strings): fully DuckDB-reproducible, so the correctness gate
+    hash-checks it.  ``use_md5=False`` is the xxhash64 family the bench
+    times.  The two share the plan above the pinned band rows (candidate
+    join, scoring, threshold, dedup); below it the signature plans
+    differ (one Arrow pass vs shingle explode + 32 md5 mins)."""
+    return minhash_lsh_pairs(_t(spark, sf_dir, "documents"),
+                             n=3, num_hashes=32, bands=8, threshold=0.5,
+                             use_md5=use_md5)
 
 
 def q_simhash(spark, sf_dir):
@@ -2885,12 +2889,21 @@ def q_decontaminate_bloom(spark, sf_dir):
             .select("doc_id"))
 
 
+# One lineitem's discounted price in exact 1e-4 units: price and
+# discount have 2 decimals, so the product has at most 4 and rounding
+# the scaled double recovers it exactly.
+_X1E4_DISC_PRICE = \
+    "cast(round(l_extendedprice * (1 - l_discount) * 10000) as bigint)"
+
+
 def q_tpch_q3(spark, sf_dir):
     """TPC-H Q3 through the pipe DSL: three filtered inputs, two CoGroups,
     GroupBy revenue, then the keyless sorted GroupBy + Limit = global
-    top-10 (TakeOrderedAndProject physically).  Revenue is rounded with
-    the engine-agnostic half-up form BEFORE the sort so the top-10 cutoff
-    compares identical doubles in every engine."""
+    top-10 (TakeOrderedAndProject physically).  Revenue is summed in
+    exact 1e-4 units (each line's ``round(x * 1e4)``, exact for 2-decimal
+    price and discount), so the sum does not depend on summation order,
+    then rounded half-up to cents in integer arithmetic BEFORE the sort:
+    the top-10 cutoff compares identical doubles in every engine."""
     cust = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
@@ -2903,14 +2916,13 @@ def q_tpch_q3(spark, sf_dir):
     j1 = CoGroup([of, cf], [Fields("o_custkey"), Fields("c_custkey")])
     j2 = CoGroup([lf, j1], [Fields("l_orderkey"), Fields("o_orderkey")])
     rev = Each(j2, Fields("l_extendedprice", "l_discount"),
-               ExpressionFunction(Fields("rev"),
-                                  "l_extendedprice * (1 - l_discount)"),
+               ExpressionFunction(Fields("rev_x1e4"), _X1E4_DISC_PRICE),
                Fields.ALL)
     g = GroupBy(rev, Fields("l_orderkey", "o_orderdate"))
-    e = Every(g, Fields("rev"), Sum("rev_sum"), Fields.ALL)
+    e = Every(g, Fields("rev_x1e4"), Sum("rev_sum"), Fields.ALL)
     rr = Each(e, Fields("rev_sum"),
               ExpressionFunction(Fields("revenue"),
-                                 "floor(rev_sum * 100 + 0.5) / 100"),
+                                 "((rev_sum + 50) div 100) / 100"),
               Fields.ALL)
     rr = Each(rr, Fields("o_orderdate"),
               ExpressionFunction(Fields("o_date"),
@@ -2928,42 +2940,47 @@ def q_tpch_q1(spark, sf_dir):
     set (q_groupby_agg covers the shape; this is the complete query:
     charge column, all three averages, the classic <= date filter).
     Scan-heavy: one filter pushed to the parquet scan, one partial-agg
-    hash aggregation, six output rows."""
+    hash aggregation, six output rows.
+
+    Every sum is over exact integers: each line's value scaled by
+    10^(its decimal places) and rounded (``_x1e4`` for price x discount,
+    1e6 for the charge), so the result does not depend on summation
+    order.  Outputs are the repo's integer-scaled half-up
+    ``floor(x*scale + 0.5)`` values, computed by integer division
+    (sums are non-negative, so ``div`` floors).  The 1e6-scaled charge
+    sum stays inside a long up to ~9e12 in total charge."""
     li = _t(spark, sf_dir, "lineitem")
     filt = Each(Pipe("lineitem"), Fields("l_shipdate"),
                 ExpressionFilter("l_shipdate > timestamp '1998-09-02'"))
-    pr = Each(filt, Fields("l_extendedprice", "l_discount"),
-              ExpressionFunction(Fields("disc_price"),
-                                 "l_extendedprice * (1 - l_discount)"),
-              Fields.ALL)
-    pr = Each(pr, Fields("l_extendedprice", "l_discount", "l_tax"),
-              ExpressionFunction(Fields("charge"),
-                                 "l_extendedprice * (1 - l_discount) * (1 + l_tax)"),
-              Fields.ALL)
-    g = GroupBy(pr, Fields("l_returnflag", "l_linestatus"))
-    e = Every(g, Fields("l_quantity"), Sum("sum_qty"), Fields.ALL)
-    e = Every(e, Fields("l_extendedprice"), Sum("sum_base"), Fields.ALL)
-    e = Every(e, Fields("disc_price"), Sum("sum_disc_price"), Fields.ALL)
-    e = Every(e, Fields("charge"), Sum("sum_charge"), Fields.ALL)
-    e = Every(e, Fields("l_quantity"), Average("avg_qty"), Fields.ALL)
-    e = Every(e, Fields("l_extendedprice"), Average("avg_price"), Fields.ALL)
-    e = Every(e, Fields("l_discount"), Average("avg_disc"), Fields.ALL)
+    scaled = filt
+    for name, expr in (
+            ("qty", "cast(round(l_quantity * 100) as bigint)"),
+            ("base", "cast(round(l_extendedprice * 100) as bigint)"),
+            ("disc", "cast(round(l_discount * 100) as bigint)"),
+            ("disc_price", _X1E4_DISC_PRICE),
+            ("charge", "cast(round(l_extendedprice * (1 - l_discount)"
+                       " * (1 + l_tax) * 1000000) as bigint)")):
+        scaled = Each(scaled, Fields("l_quantity", "l_extendedprice",
+                                     "l_discount", "l_tax"),
+                      ExpressionFunction(Fields(name), expr), Fields.ALL)
+    g = GroupBy(scaled, Fields("l_returnflag", "l_linestatus"))
+    e = g
+    for name in ("qty", "base", "disc", "disc_price", "charge"):
+        e = Every(e, Fields(name), Sum(f"s_{name}"), Fields.ALL)
     e = Every(e, Fields.NONE, Count("count_order"), Fields.ALL)
     out = _flow(spark, e, lineitem=li)
-
-    # Integer-scaled outputs (floor(x*scale + 0.5) AS BIGINT), the repo's
-    # q6/q10/q14 convention: Spark's HALF_UP vs DuckDB's round can disagree
-    # on halfway doubles, so no final-division double crosses the hasher.
-    def _ix(c, scale):
-        return (F.floor(F.col(c) * scale + F.lit(0.5)).cast("long")
-                .alias(f"{c}_x{scale}"))
-
     return out.select(
         "l_returnflag", "l_linestatus",
-        _ix("sum_qty", 100), _ix("sum_base", 100),
-        _ix("sum_disc_price", 100), _ix("sum_charge", 100),
-        _ix("avg_qty", 100), _ix("avg_price", 100),
-        _ix("avg_disc", 10000),
+        F.col("s_qty").alias("sum_qty_x100"),
+        F.col("s_base").alias("sum_base_x100"),
+        F.expr("(s_disc_price + 50) div 100").alias("sum_disc_price_x100"),
+        F.expr("(s_charge + 5000) div 10000").alias("sum_charge_x100"),
+        F.expr("(2 * s_qty + count_order) div (2 * count_order)")
+         .alias("avg_qty_x100"),
+        F.expr("(2 * s_base + count_order) div (2 * count_order)")
+         .alias("avg_price_x100"),
+        F.expr("(200 * s_disc + count_order) div (2 * count_order)")
+         .alias("avg_disc_x10000"),
         "count_order")
 
 
@@ -4019,15 +4036,16 @@ def q_overlap_chunks(spark, sf_dir):
                           context_len=32, stride=24)
 
 
-def q_dedup_against(spark, sf_dir):
-    """Incremental cross-corpus dedup (dedup_against, minhash md5 mode):
-    odd-id docs are the incoming batch, even-id docs the curated
-    reference; near-dups of the reference are dropped.  Candidates come
-    from the new x ref banded join only — never ref x ref."""
+def q_dedup_against(spark, sf_dir, use_md5=True):
+    """Incremental cross-corpus dedup (dedup_against, minhash mode; md5
+    hash family by default, the gate spelling): odd-id docs are the
+    incoming batch, even-id docs the curated reference; near-dups of the
+    reference are dropped.  Candidates come from the new x ref banded
+    join only — never ref x ref."""
     docs = _t(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % 2 == 1)
     ref = docs.filter(F.col("doc_id") % 2 == 0)
-    out = dedup_against(new, ref, method="minhash", use_md5=True,
+    out = dedup_against(new, ref, method="minhash", use_md5=use_md5,
                         threshold=0.5)
     return out.select("doc_id", "source")
 
@@ -4111,34 +4129,55 @@ def q_group_split(spark, sf_dir):
                        test_frac=0.2).select("doc_id", "source", "split")
 
 
-def q_curation_flagship(spark, sf_dir, return_stages=False):
-    """The end-to-end curation flagship (curate_corpus): clean ->
-    Gopher+blocklist gates -> canonical-URL dedup -> md5-MinHash LSH
-    dedup (connected components, keep min-id representative) ->
-    benchmark decontamination (8-grams, doc_id%20==0 held out) ->
-    temperature mixture (8000-token budget) -> leakage-safe source
-    split -> sequence packing.  One declarative plan; the oracle
-    replays every stage (md5 twin).  The xxhash64 fast-hash variant of
-    stage 4 is the bench path (identical plan shape).
-    ``return_stages=True`` also returns the stage frames
-    (:func:`curate_corpus`), for plan-shape tests."""
+def _curation(spark, sf_dir, use_md5=True, **stage_kwargs):
+    """The curation flagship's shared set-up: documents with messy URLs,
+    the cleaned ``doc_id % 20 == 0`` slice held out as the benchmark,
+    the rest as the corpus, the Gopher gate, the ``dup`` blocklist and
+    the 8000-token budget.  ``stage_kwargs`` go to :func:`curate_corpus`
+    (opt-in stages, ``return_stages``); a ``dsir_kwargs`` without a
+    ``target`` gets the cleaned ``doc_id % 13 == 0`` slice.
+    ``use_md5=True`` is the gate spelling; ``False`` is the xxhash64
+    MinHash family the bench times."""
     from cascading_flink_spark.extensions.text import clean_text_expr
     docs = _t(spark, sf_dir, "documents").withColumn("url", _messy_url())
-    bench = docs.filter(F.col("doc_id") % 20 == 0).select(
-        "doc_id", clean_text_expr(F.coalesce("text", F.lit(""))).alias("text"))
-    corpus = docs.filter(F.col("doc_id") % 20 != 0)
+    cleaned = clean_text_expr(F.coalesce("text", F.lit("")))
+
+    def held_out(m):
+        return docs.filter(F.col("doc_id") % m == 0).select(
+            "doc_id", cleaned.alias("text"))
+
+    dsir = stage_kwargs.get("dsir_kwargs")
+    if dsir is not None and "target" not in dsir:
+        stage_kwargs["dsir_kwargs"] = dict(dsir, target=held_out(13))
     return curate_corpus(
-        corpus, bench, use_md5=True,
+        docs.filter(F.col("doc_id") % 20 != 0), held_out(20),
+        use_md5=use_md5,
         gopher_kwargs=dict(min_words=30, max_words=120,
                            min_mean_word_len_x100=300,
                            max_mean_word_len_x100=450,
                            min_stop_hits=1),
         blocklist_terms=["dup"],
         total_budget=8000, test_frac=0.2, context_len=512,
-        return_stages=return_stages)
+        **stage_kwargs)
 
 
-def q_curation_dsir(spark, sf_dir):
+def q_curation_flagship(spark, sf_dir, use_md5=True, return_stages=False):
+    """The end-to-end curation flagship (curate_corpus): clean ->
+    Gopher+blocklist gates -> canonical-URL dedup -> md5-MinHash LSH
+    dedup (connected components, keep min-id representative) ->
+    benchmark decontamination (8-grams, doc_id%20==0 held out) ->
+    temperature mixture (8000-token budget) -> leakage-safe source
+    split -> sequence packing.  One declarative plan; the oracle
+    replays every stage (md5 family).  ``use_md5=False`` is the
+    xxhash64 MinHash the bench times; it shares every plan node above
+    the pinned band rows, only the signature plan differs.
+    ``return_stages=True`` also returns the stage frames
+    (:func:`curate_corpus`), for plan-shape tests."""
+    return _curation(spark, sf_dir, use_md5,
+                     return_stages=return_stages)
+
+
+def q_curation_dsir(spark, sf_dir, use_md5=True):
     """The flagship with the opt-in DSIR quality-targeted-selection
     stage (dsir_kwargs): after decontamination, keep the 50 survivors
     whose hashed-n-gram distribution best matches a target slice
@@ -4146,26 +4185,11 @@ def q_curation_dsir(spark, sf_dir):
     like the target" pass between cleaning and mixture.  The oracle
     replays the whole chain INCLUDING the dsir bucket tables, weight
     table, normalizer and the top-50 cut."""
-    from cascading_flink_spark.extensions.text import clean_text_expr
-    docs = _t(spark, sf_dir, "documents").withColumn("url", _messy_url())
-    cleaned = clean_text_expr(F.coalesce("text", F.lit("")))
-    bench = docs.filter(F.col("doc_id") % 20 == 0).select(
-        "doc_id", cleaned.alias("text"))
-    target = docs.filter(F.col("doc_id") % 13 == 0).select(
-        "doc_id", cleaned.alias("text"))
-    corpus = docs.filter(F.col("doc_id") % 20 != 0)
-    return curate_corpus(
-        corpus, bench, use_md5=True,
-        gopher_kwargs=dict(min_words=30, max_words=120,
-                           min_mean_word_len_x100=300,
-                           max_mean_word_len_x100=450,
-                           min_stop_hits=1),
-        blocklist_terms=["dup"],
-        dsir_kwargs=dict(target=target, keep_n=50, buckets=512),
-        total_budget=8000, test_frac=0.2, context_len=512)
+    return _curation(spark, sf_dir, use_md5,
+                     dsir_kwargs=dict(keep_n=50, buckets=512))
 
 
-def q_curation_despan(spark, sf_dir):
+def q_curation_despan(spark, sf_dir, use_md5=True):
     """The flagship with the opt-in exact-substring stage enabled
     (dupspan_kwargs): after MinHash near-dup removal, strip_dup_spans
     drops every cross-document duplicated 4-gram span (smallest-id owner
@@ -4174,23 +4198,11 @@ def q_curation_despan(spark, sf_dir):
     measurably rewrites this corpus (11 of 71 sf0.01 survivors; k=8
     would be vacuous here).  Oracle = the full flagship chain with the
     stage's CTEs spliced in."""
-    from cascading_flink_spark.extensions.text import clean_text_expr
-    docs = _t(spark, sf_dir, "documents").withColumn("url", _messy_url())
-    bench = docs.filter(F.col("doc_id") % 20 == 0).select(
-        "doc_id", clean_text_expr(F.coalesce("text", F.lit(""))).alias("text"))
-    corpus = docs.filter(F.col("doc_id") % 20 != 0)
-    return curate_corpus(
-        corpus, bench, use_md5=True,
-        gopher_kwargs=dict(min_words=30, max_words=120,
-                           min_mean_word_len_x100=300,
-                           max_mean_word_len_x100=450,
-                           min_stop_hits=1),
-        blocklist_terms=["dup"],
-        dupspan_kwargs=dict(k=4, min_docs=2),
-        total_budget=8000, test_frac=0.2, context_len=512)
+    return _curation(spark, sf_dir, use_md5,
+                     dupspan_kwargs=dict(k=4, min_docs=2))
 
 
-def q_curation_margin(spark, sf_dir):
+def q_curation_margin(spark, sf_dir, use_md5=True):
     """The flagship with the opt-in cross-lingual pair-mining stage
     (margin_kwargs): after MinHash dedup, mine mutual-best ratio-margin
     pairs between the 'en' slice and the rest over dim=16 hash-trick
@@ -4199,21 +4211,9 @@ def q_curation_margin(spark, sf_dir):
     dup before decontamination.  Oracle = the full flagship chain with
     the stage's CTEs spliced in (hash_embed spelling + the margin_mine
     spelling over the post-dedup corpus)."""
-    from cascading_flink_spark.extensions.text import clean_text_expr
-    docs = _t(spark, sf_dir, "documents").withColumn("url", _messy_url())
-    bench = docs.filter(F.col("doc_id") % 20 == 0).select(
-        "doc_id", clean_text_expr(F.coalesce("text", F.lit(""))).alias("text"))
-    corpus = docs.filter(F.col("doc_id") % 20 != 0)
-    return curate_corpus(
-        corpus, bench, use_md5=True,
-        gopher_kwargs=dict(min_words=30, max_words=120,
-                           min_mean_word_len_x100=300,
-                           max_mean_word_len_x100=450,
-                           min_stop_hits=1),
-        blocklist_terms=["dup"],
-        margin_kwargs=dict(side_a="en", k=4, threshold_x1e4=10200,
-                           dim=16),
-        total_budget=8000, test_frac=0.2, context_len=512)
+    return _curation(spark, sf_dir, use_md5,
+                     margin_kwargs=dict(side_a="en", k=4,
+                                        threshold_x1e4=10200, dim=16))
 
 
 def q_quality_classifier(spark, sf_dir):
@@ -4376,8 +4376,8 @@ def q_minhash_recall(spark, sf_dir):
     truth = ngram_jaccard_pairs(docs, n=3, threshold=0.5,
                                 _shingled=sh) \
         .select("id_a", "id_b")
-    lsh = minhash_lsh_pairs_md5(docs, n=3, num_hashes=32, bands=8,
-                                threshold=0.5, _shingled=sh) \
+    lsh = minhash_lsh_pairs(docs, n=3, num_hashes=32, bands=8,
+                            threshold=0.5, use_md5=True, _shingled=sh) \
         .select("id_a", "id_b").withColumn("__hit", F.lit(1))
     return (truth.join(lsh, ["id_a", "id_b"], "left")
             .agg(F.count(F.lit(1)).cast("long").alias("n_true"),
@@ -4700,7 +4700,8 @@ def _md5_minhash_ctes(nh: int, nb: int) -> tuple[str, str, str]:
 
 
 def _minhash_md5_oracle() -> str:
-    """DuckDB twin of minhash_lsh_pairs_md5(n=3, 32 hashes, 8 bands, t=0.5).
+    """DuckDB twin of minhash_lsh_pairs(n=3, 32 hashes, 8 bands, t=0.5,
+    use_md5=True).
 
     Same hash family (md5 hex strings, lexicographic min), same banding —
     bit-identical across engines by construction."""
@@ -8879,8 +8880,9 @@ def oracle_sql() -> dict[str, str]:
         "tpch_q3": """
             WITH r AS (
                 SELECT l_orderkey,
-                       floor(sum(l_extendedprice * (1 - l_discount)) * 100
-                             + 0.5) / 100 AS revenue,
+                       ((sum(round(l_extendedprice * (1 - l_discount)
+                                   * 10000)::BIGINT) + 50) // 100)
+                           / 100 AS revenue,
                        strftime(o_orderdate, '%Y-%m-%d') AS o_date
                 FROM lineitem
                 JOIN orders ON l_orderkey = o_orderkey
@@ -9459,18 +9461,29 @@ def oracle_sql() -> dict[str, str]:
             FROM d
         """,
         "tpch_q1": """
+            WITH s AS (
+                SELECT l_returnflag, l_linestatus,
+                       sum(round(l_quantity * 100)::BIGINT) AS s_qty,
+                       sum(round(l_extendedprice * 100)::BIGINT) AS s_base,
+                       sum(round(l_discount * 100)::BIGINT) AS s_disc,
+                       sum(round(l_extendedprice * (1 - l_discount)
+                                 * 10000)::BIGINT) AS s_disc_price,
+                       sum(round(l_extendedprice * (1 - l_discount)
+                                 * (1 + l_tax) * 1000000)::BIGINT) AS s_charge,
+                       count(*) AS n
+                FROM lineitem
+                WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+                GROUP BY l_returnflag, l_linestatus)
             SELECT l_returnflag, l_linestatus,
-                   CAST(floor(sum(l_quantity) * 100 + 0.5) AS BIGINT) AS sum_qty_x100,
-                   CAST(floor(sum(l_extendedprice) * 100 + 0.5) AS BIGINT) AS sum_base_x100,
-                   CAST(floor(sum(l_extendedprice * (1 - l_discount)) * 100 + 0.5) AS BIGINT) AS sum_disc_price_x100,
-                   CAST(floor(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)) * 100 + 0.5) AS BIGINT) AS sum_charge_x100,
-                   CAST(floor(avg(l_quantity) * 100 + 0.5) AS BIGINT) AS avg_qty_x100,
-                   CAST(floor(avg(l_extendedprice) * 100 + 0.5) AS BIGINT) AS avg_price_x100,
-                   CAST(floor(avg(l_discount) * 10000 + 0.5) AS BIGINT) AS avg_disc_x10000,
-                   count(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-            GROUP BY l_returnflag, l_linestatus
+                   CAST(s_qty AS BIGINT) AS sum_qty_x100,
+                   CAST(s_base AS BIGINT) AS sum_base_x100,
+                   CAST((s_disc_price + 50) // 100 AS BIGINT) AS sum_disc_price_x100,
+                   CAST((s_charge + 5000) // 10000 AS BIGINT) AS sum_charge_x100,
+                   CAST((2 * s_qty + n) // (2 * n) AS BIGINT) AS avg_qty_x100,
+                   CAST((2 * s_base + n) // (2 * n) AS BIGINT) AS avg_price_x100,
+                   CAST((200 * s_disc + n) // (2 * n) AS BIGINT) AS avg_disc_x10000,
+                   n AS count_order
+            FROM s
         """,
         "tpch_q18": """
             WITH big AS (

@@ -120,6 +120,7 @@ minhash 2.8s -> 1.9s at sf0.1, both below their round-2 numbers).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
@@ -129,12 +130,18 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry
 from cascading_flink_spark.extensions import (
-    dedup_against, embedding_dup_pairs, ivf_topk, minhash_lsh_pairs,
-    pq_topk, semdedup_pairs, simhash_dup_pairs,
+    embedding_dup_pairs, ivf_topk, pq_topk, semdedup_pairs, simhash_dup_pairs,
 )
 from cascading_flink_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Registry queries whose MinHash stage the gate runs in the md5 family
+# DuckDB replays; the bench times the same registry function with the
+# xxhash64 family (``use_md5=False``) — one code path, only the band
+# rows' signature plan differs.
+XXHASH_QUERIES = ("minhash_lsh", "dedup_against", "curation_flagship",
+                  "curation_despan", "curation_dsir", "curation_margin")
 
 # Headline set: the scan/agg, join-pipeline, window, UDF and training-data
 # paths.  embedding_dups uses the LSH (scale) variant here — the exact
@@ -448,21 +455,15 @@ def main() -> None:
     qs = entry.queries()
 
     # embedding_dups at bench scale: LSH-bucketed candidate generation.
-    # minhash/simhash at bench scale: the xxhash64 fast paths (queries()
-    # carries the md5 cross-engine twins for the correctness gate).
+    # simhash at bench scale: the xxhash64 fast path (queries() carries
+    # the md5 cross-engine twin for the correctness gate).
     qs = dict(qs)
+    for name in XXHASH_QUERIES:
+        qs[name] = functools.partial(qs[name], use_md5=False)
     qs["embedding_dups_lsh"] = lambda s, d: embedding_dup_pairs(
         entry._t(s, d, "embeddings"), threshold=0.4, exact=False)
-    qs["minhash_lsh"] = lambda s, d: minhash_lsh_pairs(
-        entry._t(s, d, "documents"), n=3, num_hashes=32, bands=8, threshold=0.5)
     qs["simhash"] = lambda s, d: simhash_dup_pairs(
         entry._t(s, d, "documents"), max_hamming=3)
-    # dedup_against at bench scale: the xxhash64 fast family (queries()
-    # carries the md5 cross-engine twin for the correctness gate).
-    qs["dedup_against"] = lambda s, d: dedup_against(
-        entry._t(s, d, "documents").filter("doc_id % 2 = 1"),
-        entry._t(s, d, "documents").filter("doc_id % 2 = 0"),
-        method="minhash", threshold=0.5).select("doc_id", "source")
     # ann_ivf at bench scale: the Lloyd-trained production path (queries()
     # carries the md5 cross-engine twin for the correctness gate).
     qs["ann_ivf"] = lambda s, d: ivf_topk(
@@ -474,100 +475,6 @@ def main() -> None:
     # carries the md5 cross-engine twin for the correctness gate).
     qs["semdedup"] = lambda s, d: semdedup_pairs(
         entry._t(s, d, "embeddings"), threshold=0.3, n_clusters=16)
-    # curation_flagship at bench scale: identical stage chain but the
-    # near-dup stage uses the xxhash64 fast MinHash (queries() carries
-    # the md5 cross-engine twin for the correctness gate; plan shape is
-    # identical, only the hash expressions differ).
-    from cascading_flink_spark.extensions import curate_corpus
-    from cascading_flink_spark.extensions.text import clean_text_expr
-    from pyspark.sql import functions as F
-
-    def _flagship_fast(s, d):
-        docs = entry._t(s, d, "documents").withColumn(
-            "url", entry._messy_url())
-        bench_df = docs.filter(F.col("doc_id") % 20 == 0).select(
-            "doc_id",
-            clean_text_expr(F.coalesce("text", F.lit(""))).alias("text"))
-        corpus = docs.filter(F.col("doc_id") % 20 != 0)
-        return curate_corpus(
-            corpus, bench_df, use_md5=False,
-            gopher_kwargs=dict(min_words=30, max_words=120,
-                               min_mean_word_len_x100=300,
-                               max_mean_word_len_x100=450,
-                               min_stop_hits=1),
-            blocklist_terms=["dup"],
-            total_budget=8000, test_frac=0.2, context_len=512)
-
-    qs["curation_flagship"] = _flagship_fast
-
-    # curation_despan at bench scale: same fast-hash variant, with the
-    # opt-in exact-substring stage enabled (the md5 twin is the
-    # correctness-gate spelling)
-    def _despan_fast(s, d):
-        docs = entry._t(s, d, "documents").withColumn(
-            "url", entry._messy_url())
-        bench_df = docs.filter(F.col("doc_id") % 20 == 0).select(
-            "doc_id",
-            clean_text_expr(F.coalesce("text", F.lit(""))).alias("text"))
-        corpus = docs.filter(F.col("doc_id") % 20 != 0)
-        return curate_corpus(
-            corpus, bench_df, use_md5=False,
-            gopher_kwargs=dict(min_words=30, max_words=120,
-                               min_mean_word_len_x100=300,
-                               max_mean_word_len_x100=450,
-                               min_stop_hits=1),
-            blocklist_terms=["dup"],
-            dupspan_kwargs=dict(k=4, min_docs=2),
-            total_budget=8000, test_frac=0.2, context_len=512)
-
-    qs["curation_despan"] = _despan_fast
-
-    # curation_dsir at bench scale: same fast-hash variant with the
-    # opt-in DSIR selection stage (the md5 twin is the gate spelling)
-    def _dsir_flagship_fast(s, d):
-        docs = entry._t(s, d, "documents").withColumn(
-            "url", entry._messy_url())
-        cleaned = clean_text_expr(F.coalesce("text", F.lit("")))
-        bench_df = docs.filter(F.col("doc_id") % 20 == 0).select(
-            "doc_id", cleaned.alias("text"))
-        target = docs.filter(F.col("doc_id") % 13 == 0).select(
-            "doc_id", cleaned.alias("text"))
-        corpus = docs.filter(F.col("doc_id") % 20 != 0)
-        return curate_corpus(
-            corpus, bench_df, use_md5=False,
-            gopher_kwargs=dict(min_words=30, max_words=120,
-                               min_mean_word_len_x100=300,
-                               max_mean_word_len_x100=450,
-                               min_stop_hits=1),
-            blocklist_terms=["dup"],
-            dsir_kwargs=dict(target=target, keep_n=50, buckets=512),
-            total_budget=8000, test_frac=0.2, context_len=512)
-
-    qs["curation_dsir"] = _dsir_flagship_fast
-
-    # curation_margin at bench scale: same fast-hash variant with the
-    # opt-in cross-lingual pair-mining stage (the md5 twin is the gate
-    # spelling)
-    def _margin_flagship_fast(s, d):
-        docs = entry._t(s, d, "documents").withColumn(
-            "url", entry._messy_url())
-        bench_df = docs.filter(F.col("doc_id") % 20 == 0).select(
-            "doc_id",
-            clean_text_expr(F.coalesce("text", F.lit(""))).alias("text"))
-        corpus = docs.filter(F.col("doc_id") % 20 != 0)
-        return curate_corpus(
-            corpus, bench_df, use_md5=False,
-            gopher_kwargs=dict(min_words=30, max_words=120,
-                               min_mean_word_len_x100=300,
-                               max_mean_word_len_x100=450,
-                               min_stop_hits=1),
-            blocklist_terms=["dup"],
-            margin_kwargs=dict(side_a="en", k=4, threshold_x1e4=10200,
-                               dim=16),
-            total_budget=8000, test_frac=0.2, context_len=512)
-
-    qs["curation_margin"] = _margin_flagship_fast
-
     # margin_mine: no bench override any more — the operator's DEFAULT
     # is now the banded-LSH candidate graph (md5-Rademacher bands, no
     # CartesianProduct), so queries()'s gate spelling IS the production

@@ -23,8 +23,7 @@ from .dedup import (
     gram_novelty, dedup_soft_weights,
     edit_dup_pairs,
     exact_dedup, exact_dedup_pairs, ngram_containment_pairs,
-    ngram_jaccard_pairs, minhash_lsh_pairs,
-    minhash_lsh_pairs_md5, simhash_bits, simhash_dup_pairs,
+    ngram_jaccard_pairs, minhash_lsh_pairs, simhash_bits, simhash_dup_pairs,
     simhash_md5_pairs, dedup_clusters, dedup_keep_best, paragraph_dedup,
     strip_boilerplate, strip_dup_spans, strip_dup_substrings,
     winnow_fingerprints, winnow_pairs,

@@ -48,8 +48,10 @@ key agg, the banded-join candidate generation, the per-language admission
 window, and the packing cumsum.
 
 The full chain is DuckDB-replayable when ``use_md5=True`` (the
-correctness-gate twin); ``use_md5=False`` swaps stage 4's hashes for the
-xxhash64 fast path (the bench/production variant, identical plan shape).
+correctness-gate spelling); ``use_md5=False`` swaps stage 4's MinHash
+signature for the xxhash64 family (the bench/production spelling).  Only
+the band rows differ: the candidate join, scoring and dedup above them
+are one code path (:func:`.dedup.minhash_lsh_pairs`).
 """
 
 from __future__ import annotations
@@ -59,7 +61,7 @@ from pyspark.sql import functions as F
 
 from .decontam import decontaminate
 from .dedup import (_fan_out, _no_push, dedup_clusters, minhash_lsh_pairs,
-                    minhash_lsh_pairs_md5, strip_dup_spans)
+                    strip_dup_spans)
 from .mixture import group_split, temperature_mixture
 from .packing import chunk_corpus
 from .text import (blocklist_hits_expr, c4_line_keep_expr, clean_text_expr,
@@ -84,7 +86,6 @@ def curate_corpus(docs: DataFrame, benchmark: DataFrame,
                   total_budget: int = 8000,
                   test_frac: float = 0.2,
                   context_len: int = 512,
-                  mixture_strategy: str = "twoscan",
                   return_stages: bool = False):
     """Run the whole curation pipeline; returns one row per surviving
     document: ``(doc_id, lang, source, split, n_tokens, start_offset,
@@ -198,9 +199,10 @@ def curate_corpus(docs: DataFrame, benchmark: DataFrame,
     # (swap for reliable checkpoint/parquet there — localCheckpoint is
     # executor-local and not fault-tolerant).
     gated = gated.localCheckpoint(eager=False)
-    pair_fn = minhash_lsh_pairs_md5 if use_md5 else minhash_lsh_pairs
-    pairs = pair_fn(gated, n=minhash_n, num_hashes=num_hashes, bands=bands,
-                    threshold=threshold, text_col=text_col, id_col=id_col)
+    pairs = minhash_lsh_pairs(gated, n=minhash_n, num_hashes=num_hashes,
+                              bands=bands, threshold=threshold,
+                              text_col=text_col, id_col=id_col,
+                              use_md5=use_md5)
     # below the driver cutoff the clusters carry a broadcast hint, so
     # the anti-join broadcasts the dup-id set and the corpus stays put
     dup_ids = (dedup_clusters(pairs)
@@ -316,7 +318,7 @@ def curate_corpus(docs: DataFrame, benchmark: DataFrame,
         .localCheckpoint(eager=False))
     admitted = temperature_mixture(counted, total_budget,
                                    lang_col=lang_col, id_col=id_col,
-                                   strategy=mixture_strategy)
+                                   strategy="twoscan")
     stages["admitted"] = admitted
 
     # 7-8. leakage-safe split by source group, then sequence packing

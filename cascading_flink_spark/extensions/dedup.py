@@ -23,6 +23,7 @@ cross-engine reproducibility is not required; md5 where it is).
 
 from __future__ import annotations
 
+import math
 import re
 
 import numpy as np
@@ -112,42 +113,43 @@ def _plan_splits(node, adaptive: bool = False) -> int | None:
     return None
 
 
-def _no_push(pred: Column) -> Column:
-    """Pushdown barrier for a WHOLE filter predicate:
-    ``when(spark_partition_id() >= 0, pred) else false`` evaluates to
-    ``pred`` identically (the guard is always true), but the
-    nondeterministic guard lives INSIDE the ``when``, where
-    PushPredicateThroughNonJoin can neither push the filter through a
-    repartition nor split the conjunction apart to push its
-    deterministic conjuncts individually (the failure mode of
-    ``pred & guard``, which the optimizer splits).  Use it when a filter
-    references EXPENSIVE computed columns (regex chains) and pushdown
-    would move them below a repartition — the sibling of :func:`_once`
-    for predicates instead of projected expressions.  The filter still
-    moves below a deterministic projection directly under it.
+def _guarded(col: Column, otherwise) -> Column:
+    """``when(spark_partition_id() >= 0, col).otherwise(otherwise)`` —
+    equal to ``col`` on every row (the guard is always true), but
+    nondeterministic, so the optimizer can neither move nor duplicate
+    what it guards.  The one barrier idiom behind :func:`_no_push` and
+    :func:`_once`.
 
     The guard must be one the optimizer cannot fold: an earlier
     spelling, ``rand(0) > -1``, was a no-op, because OptimizeRand rewrites
     a comparison of ``rand`` with a literal outside [0, 1) to ``true``
     and the filter was pushed as if unguarded.  Codegen-friendly
-    (spark_partition_id and when are codegen expressions)."""
-    return (F.when(F.spark_partition_id() >= 0, pred)
-             .otherwise(F.lit(False)))
+    (spark_partition_id and when are codegen expressions; F.shuffle-style
+    barriers are CodegenFallback and deoptimize the whole projection, a
+    localCheckpoint barrier pays eager physical planning)."""
+    return F.when(F.spark_partition_id() >= 0, col).otherwise(otherwise)
+
+
+def _no_push(pred: Column) -> Column:
+    """Pushdown barrier for a WHOLE filter predicate.  The guard lives
+    INSIDE the ``when``, where PushPredicateThroughNonJoin can neither
+    push the filter through a repartition nor split the conjunction
+    apart to push its deterministic conjuncts individually (the failure
+    mode of ``pred & guard``, which the optimizer splits).  Use it when
+    a filter references EXPENSIVE computed columns (regex chains) and
+    pushdown would move them below a repartition.  The filter still
+    moves below a deterministic projection directly under it."""
+    return _guarded(pred, F.lit(False))
 
 
 def _once(col: Column) -> Column:
-    """Nondeterminism barrier for an EXPENSIVE integer expression that a
-    downstream filter references more than once: ``col + rand(0)*0``
-    (value unchanged — the rand term is identically 0) marks the
-    expression nondeterministic so the optimizer can neither fold the
-    filter into a join condition nor duplicate the expression across a
-    pushed-down predicate + projection pair — the projection stays put
-    and the expression evaluates ONCE per row.  Rand is
-    codegen-supported, so the stage keeps whole-stage codegen
-    (F.shuffle-style barriers are CodegenFallback and deoptimize the
-    whole projection; a localCheckpoint barrier pays eager physical
-    planning).  Round-14 measurements in :func:`ngram_jaccard_pairs`."""
-    return col + (F.rand(0) * 0).cast("int")
+    """Barrier for an EXPENSIVE integer expression that a downstream
+    filter references more than once: the nondeterministic projection
+    can neither be folded into a join condition nor duplicated across a
+    pushed-down predicate + projection pair, so the expression
+    evaluates ONCE per row.  Round-14 measurements in
+    :func:`ngram_jaccard_pairs`."""
+    return _guarded(col, F.lit(0))
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text",
@@ -812,48 +814,51 @@ def dedup_soft_weights(df: DataFrame, n: int = 3, threshold: float = 0.8,
                      .alias("w_x1e6")))
 
 
-def _check_bands(num_hashes: int, bands: int) -> int:
+def _band_rows(sig: DataFrame, num_hashes: int, bands: int,
+               band_key) -> DataFrame:
+    """``(id, sig, band, bh)`` — one row per (doc, band) of an
+    ``(id, sig)`` signature frame; ``band_key`` hashes one band's
+    signature rows to its key.  An empty signature would hash to one
+    shared band key, so it gets no bands: the explode's input is NULL
+    for it.  A filter on size(sig) instead would be pushed beneath the
+    projection and run an Arrow signature UDF a second time."""
     rows_per_band = num_hashes // bands
     if rows_per_band * bands != num_hashes:
         raise ValueError("num_hashes must be divisible by bands")
-    return rows_per_band
-
-
-
+    keys = F.array(*[
+        F.struct(F.lit(b).alias("band"),
+                 band_key([F.col("sig")[b * rows_per_band + r]
+                           for r in range(rows_per_band)]).alias("bh"))
+        for b in range(bands)])
+    return (sig.select("id", "sig",
+                       F.explode(F.when(F.size("sig") > 0, keys)).alias("bk"))
+               .select("id", "sig", F.col("bk.band").alias("band"),
+                       F.col("bk.bh").alias("bh")))
 
 
 def _xx_banded(df: DataFrame, text_col: str, id_col: str, n: int,
                num_hashes: int, bands: int) -> DataFrame:
     """xxhash64 MinHash signatures + LSH band keys:
-    ``(id, sig, band, bh)`` — one row per (doc, band).  Shared by the
-    within-corpus pair generator and cross-corpus dedup_against."""
-    rows_per_band = _check_bands(num_hashes, bands)
+    ``(id, sig: array<long>, band, bh)`` — one row per (doc, band)."""
     sig = (_fan_out(df)
            .select(F.col(id_col).alias("id"),
                    _minhash_sig_arrow(text_col, n, num_hashes).alias("sig")))
-    # An empty signature would hash to one shared band key, so it gets no
-    # bands: the explode's input is NULL for it.  A filter on size(sig)
-    # instead would be pushed beneath the projection and run the Arrow
-    # UDF a second time.
-    banded = sig.select(
-        "id", "sig",
-        F.explode(F.when(F.size("sig") > 0, F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.xxhash64(*[F.col("sig")[b * rows_per_band + r]
-                                  for r in range(rows_per_band)]).alias("bh"))
-            for b in range(bands)
-        ]))).alias("bk"))
-    return banded.select("id", "sig", F.col("bk.band").alias("band"),
-                         F.col("bk.bh").alias("bh"))
+    return _band_rows(sig, num_hashes, bands, lambda rows: F.xxhash64(*rows))
 
 
 def _md5_banded(df: DataFrame, text_col: str, id_col: str, n: int,
                 num_hashes: int, bands: int,
                 _shingled: DataFrame | None = None) -> DataFrame:
     """md5-hex MinHash signatures + band keys (the cross-engine family):
-    ``(id, __h0..__h{num_hashes-1}, band, bh)``.  ``_shingled``: a
-    caller-supplied :func:`shingle_frame` (pinned, may contain empty
-    arrays — filtered here), so compositions shingle once.
+    ``(id, sig: array<string>, band, bh)`` — the :func:`_xx_banded`
+    schema.  Permutation ``i`` is the ``min`` over the LEXICOGRAPHIC
+    order of ``md5(i || '#' || shingle)`` hex strings (a uniform random
+    order of the shingle universe, so a valid MinHash); band keys are
+    ``md5(concat_ws('|', band rows))``.  md5 hex strings order
+    identically in every engine, so DuckDB reproduces the result bit
+    for bit.  ``_shingled``: a caller-supplied :func:`shingle_frame`
+    (pinned, may contain empty arrays — filtered here), so compositions
+    shingle once.
 
     Round-14 adjudication note: an Arrow one-pass signature reducer
     (the :func:`_minhash_sig_arrow` move, md5-exact) was prototyped
@@ -863,7 +868,6 @@ def _md5_banded(df: DataFrame, text_col: str, id_col: str, n: int,
     extra Arrow boundary costs more than the explode shuffle + wide
     agg it removed, and at 8x+ the banded candidate join dominates
     either way (the xx-family's own docstring)."""
-    rows_per_band = _check_bands(num_hashes, bands)
     shingled = (_shingled if _shingled is not None
                 else _fan_out(df).select(
                     F.col(id_col).alias("id"),
@@ -874,106 +878,92 @@ def _md5_banded(df: DataFrame, text_col: str, id_col: str, n: int,
     # the Arrow shingle UDF twice (shingles are never null)
     inv = (shingled.select("id", F.explode_outer("sh").alias("s"))
            .filter(F.col("s").isNotNull()))
-    mins = inv.groupBy("id").agg(*[
-        F.min(F.md5(F.concat_ws("#", F.lit(str(i)), F.col("s")))).alias(f"__h{i}")
+    sig = inv.groupBy("id").agg(F.array(*[
+        F.min(F.md5(F.concat_ws("#", F.lit(str(i)), F.col("s"))))
         for i in range(num_hashes)
-    ])
-    banded = mins.select(
-        "id", *[F.col(f"__h{i}") for i in range(num_hashes)],
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(F.concat_ws("|", *[F.col(f"__h{b * rows_per_band + r}")
-                                         for r in range(rows_per_band)])).alias("bh"))
-            for b in range(bands)
-        ])).alias("bk"))
-    return banded.select("id", *[f"__h{i}" for i in range(num_hashes)],
-                         F.col("bk.band").alias("band"),
-                         F.col("bk.bh").alias("bh"))
+    ]).alias("sig"))
+    return _band_rows(sig, num_hashes, bands,
+                      lambda rows: F.md5(F.concat_ws("|", *rows)))
+
+
+def _banded(df: DataFrame, text_col: str, id_col: str, n: int,
+            num_hashes: int, bands: int, use_md5: bool,
+            _shingled: DataFrame | None = None) -> DataFrame:
+    """``(id, sig, band, bh)`` band rows of the chosen hash family —
+    the only place the MinHash family differs; everything above it
+    (:func:`_agreeing`) is one code path."""
+    if use_md5:
+        return _md5_banded(df, text_col, id_col, n, num_hashes, bands,
+                           _shingled=_shingled)
+    if _shingled is not None:
+        raise ValueError("_shingled feeds the md5 family only: the "
+                         "xxhash64 signature hashes the text in one pass")
+    return _xx_banded(df, text_col, id_col, n, num_hashes, bands)
+
+
+def _agreeing(a: DataFrame, b: DataFrame, num_hashes: int,
+              threshold: float) -> DataFrame:
+    """Band-key candidate join of two banded frames renamed to
+    ``(<id>, sig_a, band, bh)`` and ``(<id>, sig_b, band, bh)``, scored
+    by signature agreement ``__agree`` and kept where ``__agree /
+    num_hashes >= threshold``.
+
+    Agreement is an unrolled sum of per-position equality —
+    whole-stage-codegen'd compares.  (zip_with/filter higher-order
+    lambdas are interpreted per element; over ~1M candidate pairs that
+    interpretation dominated the whole query.)  The threshold is the
+    integer ``ceil(threshold * num_hashes)``, not a compare of a rounded
+    double: floor admitted pairs strictly below threshold, and the
+    epsilon keeps ``0.5 * 32`` at 16."""
+    agree = sum(
+        (F.when(F.col("sig_a")[i] == F.col("sig_b")[i], 1).otherwise(0)
+         for i in range(num_hashes)),
+        F.lit(0))
+    min_agree = math.ceil(threshold * num_hashes - 1e-9)
+    return (a.join(b, ["band", "bh"])
+             .withColumn("__agree", agree)
+             .filter(F.col("__agree") >= min_agree))
 
 
 def minhash_lsh_pairs(df: DataFrame, n: int = 3, num_hashes: int = 32,
                       bands: int = 8, threshold: float = 0.5,
-                      text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+                      text_col: str = "text", id_col: str = "doc_id",
+                      use_md5: bool = False,
+                      _shingled: DataFrame | None = None) -> DataFrame:
     """MinHash + LSH banding candidate generation, verified by signature
     similarity.
 
-    Signature: per seed i in [0, num_hashes), min(xxhash64(shingle, i)).
     Banding: num_hashes/bands rows per band; docs sharing any band hash
     become candidates (equality join on (band_idx, band_hash) — shuffle
     volume O(docs x bands)).  Candidates are scored by signature agreement
     (estimated Jaccard) and filtered at ``threshold``.
 
-    Returns (id_a, id_b, est_jaccard).  Deterministic (seeded hashes), but
-    engine-specific (xxhash64) — correctness gate uses the rows-only check.
-    """
-    banded = _xx_banded(df, text_col, id_col, n, num_hashes, bands)\
-        .localCheckpoint(eager=False)
-    a = banded.toDF("id_a", "sig_a", "band", "bh")
-    b = banded.toDF("id_b", "sig_b", "band", "bh")
-    # Signature agreement as an unrolled sum of per-position equality —
-    # whole-stage-codegen'd integer compares.  (zip_with/filter higher-order
-    # lambdas are interpreted per element; over ~1M candidate pairs that
-    # interpretation dominated the whole query.)  Score and threshold
-    # BEFORE the pair-dedup aggregation: agreement is identical for every
-    # banded duplicate of a pair, and dropping the two 32-long signature
-    # arrays first shrinks the dedup shuffle payload ~20x (the candidate
-    # join itself, which must carry both signatures to score, remains the
-    # dominant cost at the 8x replication's dup-cluster density).
-    agree = sum(
-        (F.when(F.col("sig_a")[i] == F.col("sig_b")[i], 1).otherwise(0)
-         for i in range(num_hashes)),
-        F.lit(0))
-    return (a.join(b, ["band", "bh"])
+    ``use_md5`` picks the hash family, and nothing else:
+    ``False`` is the xxhash64 one-pass Arrow signature
+    (:func:`_xx_banded`, the bench/production family, engine-specific);
+    ``True`` is the md5-hex family (:func:`_md5_banded`, ~3x more per
+    hash) that DuckDB reproduces bit for bit — the correctness-gate
+    spelling.  ``_shingled`` (md5 family only) is a caller-supplied
+    :func:`shingle_frame`, so compositions shingle once.
+
+    Returns (id_a, id_b, est_jaccard) with id_a < id_b, signature
+    agreement >= threshold and ``est_jaccard = floor(agree /
+    num_hashes * 1e4 + 0.5) / 1e4``."""
+    banded = _banded(df, text_col, id_col, n, num_hashes, bands, use_md5,
+                     _shingled=_shingled).localCheckpoint(eager=False)
+    # Score and threshold BEFORE the pair-dedup aggregation: agreement is
+    # identical for every banded duplicate of a pair, and dropping the
+    # two signature arrays first shrinks the dedup shuffle payload ~20x
+    # (the candidate join itself, which must carry both signatures to
+    # score, remains the dominant cost at the 8x replication's
+    # dup-cluster density).
+    return (_agreeing(banded.toDF("id_a", "sig_a", "band", "bh"),
+                      banded.toDF("id_b", "sig_b", "band", "bh"),
+                      num_hashes, threshold)
              .filter(F.col("id_a") < F.col("id_b"))
-             .withColumn("est_jaccard", F.round(agree / F.lit(num_hashes), 4))
-             .filter(F.col("est_jaccard") >= threshold)
-             .select("id_a", "id_b", "est_jaccard")
-             .dropDuplicates(["id_a", "id_b"]))
-
-
-def minhash_lsh_pairs_md5(df: DataFrame, n: int = 3, num_hashes: int = 32,
-                          bands: int = 8, threshold: float = 0.5,
-                          text_col: str = "text", id_col: str = "doc_id",
-                          _shingled: DataFrame | None = None) -> DataFrame:
-    """MinHash+LSH with md5-hex hash functions — cross-engine reproducible.
-
-    Same banding plan as :func:`minhash_lsh_pairs`, but each of the
-    ``num_hashes`` permutations is ``min`` over the LEXICOGRAPHIC order of
-    ``md5(seed || '#' || shingle)`` hex strings (a uniform random order of
-    the shingle universe, so a valid MinHash), and band keys are
-    ``md5(concat_ws('|', band rows))``.  md5 hex strings order identically
-    in every engine, so DuckDB reproduces the result bit-for-bit — this is
-    the correctness-gate twin of the xxhash64 fast path (which stays the
-    bench/production variant; md5 costs ~3x more per hash).
-
-    Returns (id_a, id_b, est_jaccard) with id_a < id_b and signature
-    agreement >= threshold."""
-    banded = _md5_banded(df, text_col, id_col, n, num_hashes, bands,
-                         _shingled=_shingled)\
-        .localCheckpoint(eager=False)
-    a = banded.toDF("id_a", *[f"__a{i}" for i in range(num_hashes)], "band", "bh")
-    b = banded.toDF("id_b", *[f"__b{i}" for i in range(num_hashes)], "band", "bh")
-    agree = sum(
-        (F.when(F.col(f"__a{i}") == F.col(f"__b{i}"), 1).otherwise(0)
-         for i in range(num_hashes)),
-        F.lit(0))
-    import math
-    # ceil, not floor: agreement/num_hashes >= threshold requires the NEXT
-    # integer when threshold*num_hashes is fractional (floor admitted
-    # pairs strictly below threshold, diverging from the fast variant's
-    # est_jaccard >= threshold filter)
-    min_agree = math.ceil(threshold * num_hashes - 1e-9)
-    # score/threshold before the pair-dedup (same reorder as the fast
-    # variant): identical result set, dedup shuffle drops the 2x32 md5
-    # string columns
-    return (a.join(b, ["band", "bh"])
-             .filter(F.col("id_a") < F.col("id_b"))
-             .withColumn("__agree", agree)
-             .filter(F.col("__agree") >= min_agree)
              .select("id_a", "id_b",
-                     (F.floor(F.col("__agree") / num_hashes * 10000 + F.lit(0.5))
-                      / 10000).alias("est_jaccard"))
+                     (F.floor(F.col("__agree") / num_hashes * 10000
+                              + F.lit(0.5)) / 10000).alias("est_jaccard"))
              .dropDuplicates(["id_a", "id_b"]))
 
 
@@ -993,9 +983,10 @@ def edit_dup_pairs(df: DataFrame, max_dist: int = 10, n: int = 3,
     dedup contract, e.g. template boilerplate with inline edits).
 
     Candidates come from the md5 MinHash bands
-    (:func:`minhash_lsh_pairs_md5` — same recall contract as the
-    whole LSH family: a pair sharing no band is not considered, the
-    documented trade measured by the minhash_recall evidence query),
+    (:func:`minhash_lsh_pairs` with ``use_md5=True`` — same recall
+    contract as the whole LSH family: a pair sharing no band is not
+    considered, the documented trade measured by the minhash_recall
+    evidence query),
     then two pruning stages keep the O(len * max_dist) verify off
     non-candidates: the LENGTH filter ``|len_a - len_b| <= max_dist``
     (a necessary condition — each edit changes length by <= 1) and
@@ -1065,9 +1056,9 @@ def edit_dup_pairs(df: DataFrame, max_dist: int = 10, n: int = 3,
              .filter(F.col("id") == F.col("__rid"))
              .select("id", "__t")
              .localCheckpoint(eager=False))
-    cand = (minhash_lsh_pairs_md5(t, n=n, num_hashes=num_hashes,
-                                  bands=bands, threshold=threshold,
-                                  text_col="__t", id_col="id")
+    cand = (minhash_lsh_pairs(t, n=n, num_hashes=num_hashes,
+                              bands=bands, threshold=threshold,
+                              text_col="__t", id_col="id", use_md5=True)
             .select("id_a", "id_b"))
     ta = t.toDF("id_a", "__ta")
     tb = t.toDF("id_b", "__tb")
@@ -1184,31 +1175,13 @@ def dedup_against(new: DataFrame, reference: DataFrame,
         return clean.unionByName(verified)
     if method != "minhash":
         raise ValueError(f"unknown method {method!r}")
-    import math
-    min_agree = math.ceil(threshold * num_hashes - 1e-9)
-    if use_md5:
-        a = _md5_banded(new, text_col, id_col, n, num_hashes, bands) \
-            .toDF("id_new", *[f"__a{i}" for i in range(num_hashes)],
-                  "band", "bh")
-        b = _md5_banded(reference, text_col, id_col, n, num_hashes, bands) \
-            .toDF("id_ref", *[f"__b{i}" for i in range(num_hashes)],
-                  "band", "bh")
-        agree = sum(
-            (F.when(F.col(f"__a{i}") == F.col(f"__b{i}"), 1).otherwise(0)
-             for i in range(num_hashes)), F.lit(0))
-    else:
-        a = _xx_banded(new, text_col, id_col, n, num_hashes, bands) \
-            .toDF("id_new", "sig_a", "band", "bh")
-        b = _xx_banded(reference, text_col, id_col, n, num_hashes, bands) \
-            .toDF("id_ref", "sig_b", "band", "bh")
-        agree = sum(
-            (F.when(F.col("sig_a")[i] == F.col("sig_b")[i], 1).otherwise(0)
-             for i in range(num_hashes)), F.lit(0))
-    matched = (a.join(b, ["band", "bh"])
-                .withColumn("__agree", agree)
-                .filter(F.col("__agree") >= min_agree)
-                .select(F.col("id_new").alias("__mid"))
-                .distinct())
+    a = _banded(new, text_col, id_col, n, num_hashes, bands, use_md5) \
+        .toDF("id_new", "sig_a", "band", "bh")
+    b = _banded(reference, text_col, id_col, n, num_hashes, bands, use_md5) \
+        .toDF("id_ref", "sig_b", "band", "bh")
+    matched = (_agreeing(a, b, num_hashes, threshold)
+               .select(F.col("id_new").alias("__mid"))
+               .distinct())
     return new.join(matched, new[id_col] == matched["__mid"], "left_anti")
 
 

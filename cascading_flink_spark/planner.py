@@ -66,6 +66,36 @@ def _python_stage_parts(df: DataFrame) -> int:
     return max(df.sparkSession.sparkContext.defaultParallelism, shuffle_parts)
 
 
+def _tagged_union(renamed: list[DataFrame], key_names: list[list[str]]
+                  ) -> tuple[DataFrame, list[str], list[list[str]]]:
+    """The n-way BufferJoin input: every row keyed ``__k0..`` and tagged
+    with its input index ``__idx``, unioned over the superset of all
+    inputs' columns (inputs are already renamed collision-free),
+    null-padded.  Returns ``(unified, key_aliases, slices)`` where
+    ``slices[i]`` lists input ``i``'s own columns."""
+    key_aliases = [f"__k{i}" for i in range(len(key_names[0]))]
+    col_types: dict[str, T.DataType] = {}
+    slices: list[list[str]] = []
+    for rdf in renamed:
+        slices.append(list(rdf.columns))
+        for f in rdf.schema.fields:
+            col_types[f.name] = f.dataType
+    all_cols = [c for sl in slices for c in sl]
+    parts = []
+    for idx, (rdf, keys_i, sl) in enumerate(zip(renamed, key_names, slices)):
+        sel = [F.col(k).alias(a) for k, a in zip(keys_i, key_aliases)]
+        sel.append(F.lit(idx).alias("__idx"))
+        own = set(sl)
+        for c in all_cols:
+            sel.append(F.col(c) if c in own
+                       else F.lit(None).cast(col_types[c]).alias(c))
+        parts.append(rdf.select(*sel))
+    unified = parts[0]
+    for prt in parts[1:]:
+        unified = unified.unionByName(prt)
+    return unified, key_aliases, slices
+
+
 class FlowPlanner:
     """Compile pipes against bound source DataFrames.
 
@@ -986,29 +1016,7 @@ class FlowPlanner:
             return g1.cogroup(g2).applyInPandas(_apply, schema=schema)
 
         # n-way tagged union
-        n_keys = len(key_names[0])
-        key_aliases = [f"__k{i}" for i in range(n_keys)]
-        col_types: dict[str, T.DataType] = {}
-        slices: list[list[str]] = []
-        for rdf in renamed:
-            slices.append(list(rdf.columns))
-            for f in rdf.schema.fields:
-                col_types[f.name] = f.dataType
-        all_cols = [c for sl in slices for c in sl]
-        parts = []
-        for idx, (rdf, keys_i, sl) in enumerate(zip(renamed, key_names, slices)):
-            sel = [F.col(k).alias(a) for k, a in zip(keys_i, key_aliases)]
-            sel.append(F.lit(idx).alias("__idx"))
-            own = set(sl)
-            for c in all_cols:
-                sel.append(F.col(c) if c in own
-                           else F.lit(None).cast(col_types[c]).alias(c))
-            parts.append(rdf.select(*sel))
-        unified = parts[0]
-        for prt in parts[1:]:
-            unified = unified.unionByName(prt)
-
-        slice_list = slices  # close over
+        unified, key_aliases, slice_list = _tagged_union(renamed, key_names)
 
         def _apply_n(key, pdf):
             groups = []
@@ -1034,34 +1042,12 @@ class FlowPlanner:
         import pandas as pd
 
         n_in = len(renamed)
-        n_keys = len(key_names[0])
-        key_aliases = [f"__k{i}" for i in range(n_keys)]
-        col_types: dict[str, T.DataType] = {}
-        slices: list[list[str]] = []
-        for rdf in renamed:
-            slices.append(list(rdf.columns))
-            for f in rdf.schema.fields:
-                col_types[f.name] = f.dataType
-        all_cols = [c for sl in slices for c in sl]
-        parts = []
-        for idx, (rdf, keys_i, sl) in enumerate(zip(renamed, key_names, slices)):
-            sel = [F.col(k).alias(a) for k, a in zip(keys_i, key_aliases)]
-            sel.append(F.lit(idx).alias("__idx"))
-            own = set(sl)
-            for c in all_cols:
-                sel.append(F.col(c) if c in own
-                           else F.lit(None).cast(col_types[c]).alias(c))
-            parts.append(rdf.select(*sel))
-        unified = parts[0]
-        for prt in parts[1:]:
-            unified = unified.unionByName(prt)
+        unified, key_aliases, slice_list = _tagged_union(renamed, key_names)
         # co-partition by key; within a partition: key-major, rhs before lhs
         lhs_last = (F.col("__idx") == 0).cast("int")
         sorted_df = (unified.repartition(_python_stage_parts(unified),
                                          *[F.col(a) for a in key_aliases])
                      .sortWithinPartitions(*key_aliases, lhs_last, "__idx"))
-
-        slice_list = slices
 
         def _stream(batches):
             cur = None            # current key tuple

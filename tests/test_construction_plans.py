@@ -4,7 +4,9 @@
 the near-dup dup-id set built on the driver broadcasts into its
 anti-join, so the corpus is never hash-shuffled for it; the quality-gate
 filter stays above the round-robin exchange that fans the corpus out;
-and each MinHash banding evaluates its Arrow UDF once.
+each MinHash banding evaluates its Arrow UDF once; both MinHash hash
+families share one plan above the band rows; and the set-similarity
+verify evaluates its intersect once.
 """
 
 from __future__ import annotations
@@ -14,9 +16,9 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from cascading_flink_spark.extensions.dedup import (_fan_out, _md5_banded,
-                                                    _xx_banded,
-                                                    dedup_clusters)
+from cascading_flink_spark.extensions.dedup import (
+    _fan_out, _md5_banded, _xx_banded, dedup_clusters, minhash_lsh_pairs,
+    ngram_containment_pairs, ngram_jaccard_pairs)
 
 
 def _last_job(spark) -> int:
@@ -112,3 +114,43 @@ def test_minhash_banding_skips_shingle_less_docs(spark, banded):
     rows = banded(docs, "text", "doc_id", 3, 32, 8).collect()
     assert {r["id"] for r in rows} == {2}
     assert len(rows) == 8
+
+
+def _node_names(node) -> list[str]:
+    """Physical operator names of ``node``'s tree, preorder, looking
+    through the adaptive wrapper."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _node_names(node.executedPlan())
+    kids = node.children()
+    return [name] + [n for i in range(kids.size())
+                     for n in _node_names(kids.apply(i))]
+
+
+def test_minhash_hash_families_share_plan_above_band_pin(spark, sf_dir):
+    """``use_md5`` changes only the pinned band rows: the candidate
+    join, scoring, threshold and pair dedup above the pin are the same
+    nodes for both hash families, with the pin itself as every leaf."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    names = {use_md5: _node_names(
+        minhash_lsh_pairs(docs, n=3, num_hashes=32, bands=8, threshold=0.5,
+                          use_md5=use_md5)
+        ._jdf.queryExecution().executedPlan())
+        for use_md5 in (True, False)}
+    assert names[True] == names[False], names
+    leaves = [n for n in names[True] if n.endswith("ScanExec")]
+    assert leaves == ["RDDScanExec", "RDDScanExec"], names[True]
+    assert any(n.endswith("JoinExec") for n in names[True]), names[True]
+    assert names[True][0] == "HashAggregateExec", names[True]
+
+
+@pytest.mark.parametrize("pairs", [ngram_jaccard_pairs,
+                                   ngram_containment_pairs])
+def test_set_similarity_verify_intersects_once(spark, sf_dir, pairs):
+    """The ``_once`` barrier keeps the verify's ``array_intersect`` in
+    one projection (not duplicated into a pushed-down join condition),
+    and the barrier is the partition-id guard, not a ``rand`` term."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    plan = _plan(pairs(docs, n=3, threshold=0.6, collapse_exact=False))
+    assert plan.count("array_intersect") == 1, plan
+    assert "rand(" not in plan, plan

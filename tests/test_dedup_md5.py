@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cascading_flink_spark.extensions import (
-    minhash_lsh_pairs, minhash_lsh_pairs_md5, ngram_jaccard_pairs,
+    minhash_lsh_pairs, ngram_jaccard_pairs,
     simhash_dup_pairs, simhash_md5_pairs,
 )
 from cascading_flink_spark.extensions.dedup import (
@@ -65,8 +65,8 @@ def test_minhash_md5_finds_near_dups(spark, docs):
             minhash_lsh_pairs(docs, n=3, num_hashes=32, bands=8,
                               threshold=0.5).collect()}
     md5 = {(r["id_a"], r["id_b"]) for r in
-           minhash_lsh_pairs_md5(docs, n=3, num_hashes=32, bands=8,
-                                 threshold=0.5).collect()}
+           minhash_lsh_pairs(docs, n=3, num_hashes=32, bands=8,
+                             threshold=0.5, use_md5=True).collect()}
     assert md5, "md5 variant found no pairs"
     # hash-family noise can flip borderline pairs; the high-sim core agrees
     overlap = len(fast & md5) / max(len(fast | md5), 1)

@@ -357,9 +357,9 @@ def test_edit_dup_pairs_pins_python_levenshtein(spark):
     pairs)."""
     rows, df = _near_dup_corpus(spark)
     from cascading_flink_spark.extensions import (edit_dup_pairs,
-                                                  minhash_lsh_pairs_md5)
+                                                  minhash_lsh_pairs)
     cands = {(r.id_a, r.id_b)
-             for r in minhash_lsh_pairs_md5(df).collect()}
+             for r in minhash_lsh_pairs(df, use_md5=True).collect()}
     txt = dict(rows)
     expected = {(a, b): _lev(txt[a], txt[b]) for a, b in cands
                 if _lev(txt[a], txt[b]) <= 10}
